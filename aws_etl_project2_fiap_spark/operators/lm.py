@@ -16,7 +16,9 @@ Design for 100 TB:
   sort — and every model artifact (bigram counts, context counts,
   vocabulary size) is sample-bounded and MATERIALIZED driver-side once
   (local-relation broadcasts; a lazy model would re-run the sample
-  subtree on every downstream action).
+  subtree on every downstream action). Each count frame is one Arrow
+  batch planned as a ``LocalTableScan``, so broadcasting the model
+  runs no Python task.
 - Scoring is ONE shuffle: tokenize + bigram expansion stay in codegen,
   the two count lookups are broadcast left joins, and the per-document
   reduction is a map-side-combined ``groupBy(doc_id)``. ``explode_outer``
@@ -122,20 +124,43 @@ def _model_from_token_lists(
     spark, rows: list
 ) -> tuple[DataFrame, DataFrame, float]:
     """Bigram/context/vocab counts from already-tokenized sample docs,
-    materialized as driver-local frames (local-relation broadcasts)."""
+    materialized as driver-local frames (local-relation broadcasts).
+
+    A NULL token array (NULL text) counts as an empty document — the
+    same zero-bigram row :func:`lm_score`'s ``explode_outer`` gives it.
+    Each frame is built from ONE ``pyarrow.Table`` with the explicit
+    schema, so it plans as a ``LocalTableScan`` (empty sample included);
+    a Python-list ``createDataFrame`` is a pickled RDD
+    (``Scan ExistingRDD``) that runs a Python task per partition at
+    every broadcast of the model."""
     from collections import Counter
 
+    import pyarrow as pa
+
+    rows = [t or () for t in rows]
     cb = Counter(
         (t[i], t[i + 1]) for t in rows for i in range(len(t) - 1)
     )
     cu = Counter(t[i] for t in rows for i in range(len(t) - 1))
     vocab = {w for t in rows for w in t}
     bigram_counts = spark.createDataFrame(
-        [(a, b, n) for (a, b), n in cb.items()],
+        pa.table(
+            {
+                "a": pa.array([a for a, _ in cb], pa.string()),
+                "b": pa.array([b for _, b in cb], pa.string()),
+                "cb": pa.array(list(cb.values()), pa.int64()),
+            }
+        ),
         "a string, b string, cb long",
     )
     context_counts = spark.createDataFrame(
-        list(cu.items()), "a string, cu long"
+        pa.table(
+            {
+                "a": pa.array(list(cu), pa.string()),
+                "cu": pa.array(list(cu.values()), pa.int64()),
+            }
+        ),
+        "a string, cu long",
     )
     return bigram_counts, context_counts, float(len(vocab))
 

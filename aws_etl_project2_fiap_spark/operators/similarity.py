@@ -176,7 +176,6 @@ def near_dup_pairs_bucketed(
     dim: int = 64,
     max_bucket: int = 4096,
     attach: str = "carry",
-    attach_limit_bytes: int = 256 << 20,
 ) -> DataFrame:
     """Approximate cosine near-dup pairs: multi-table hyperplane LSH
     (OR-amplification across ``tables`` independent sketches of
@@ -188,11 +187,23 @@ def near_dup_pairs_bucketed(
 
     All tables' sketches come from ONE Arrow-batched matmul
     ((batch×dim) @ (dim×planes·tables) → sign bits → per-table bucket
-    ints). Verification happens INSIDE each (table, bucket) group with a
-    single normalized gram matmul (``applyInPandas``) — candidate pairs
-    never materialize as shuffled rows, only survivors above the
-    threshold do. The one shuffle moves ``tables``× the input vectors on
-    narrow (table, bucket) keys. Returns (id1, id2, sim).
+    ints). NULL vectors are dropped before the sketch: their cosine
+    with anything is NULL (SQL ``list_cosine_similarity``), so they
+    form no pair. Verification happens INSIDE each (table, bucket)
+    group with a single normalized gram matmul — candidate pairs never
+    materialize as shuffled rows, only survivors above the threshold
+    do. The one shuffle moves ``tables``× the input vectors on narrow
+    (table, bucket) keys. Returns (id1, id2, sim).
+
+    **Scorer shape**: the shuffle hash-partitions on (table, bucket)
+    and sorts each partition on (table, bucket, id); ONE
+    ``mapInPandas`` call per partition then walks the sorted Arrow
+    batches and scores each run of equal keys as a group. A group cut
+    by a batch edge is held as its pieces and concatenated once, when
+    its last row arrives. One Python call per partition, not one per
+    group (``applyInPandas``) — at threshold 0.4 the bench corpus has
+    hundreds of groups of a few rows each. Rows sorted on id make each
+    group's gram deterministic.
 
     **Hot-bucket cap** (``max_bucket``): a degenerate bucket — millions
     of identical boilerplate vectors — would make the in-bucket gram
@@ -206,13 +217,13 @@ def near_dup_pairs_bucketed(
     to the representative, so connected-component / keep-min-id dedup
     results are unchanged for buckets of mutual near-dups (the only way
     hot buckets arise in practice). Buckets at or under the cap keep
-    exact pair enumeration. Fusing the cap into ``applyInPandas`` keeps
-    the plan a single shuffle + one grouped stage (the r2 window +
-    branch-split + rep-join variant cost 20% at sf0.1 and a pre-check
-    action costs a duplicate sketch scan). A hot bucket still arrives
-    at one task as one Arrow batch — O(n·dim) memory, the same rows the
-    shuffle already routes to that task; the cap bounds compute and
-    output, not the single-key residency that any per-key operator has.
+    exact pair enumeration. Fusing the cap into the scorer keeps the
+    plan a single shuffle + one scoring stage (a window + branch-split
+    + rep-join variant cost 20% at sf0.1, and a pre-check action costs
+    a duplicate sketch scan). A hot bucket is still held whole by one
+    task — O(n·dim) memory, the same rows the shuffle already routes
+    to that task; the cap bounds compute and output, not the
+    single-key residency that any per-key operator has.
 
     ``planes``/``tables`` default to :func:`lsh_params_for_threshold` —
     sized so recall at the threshold is ~1−1e-6, which is what lets
@@ -220,39 +231,38 @@ def near_dup_pairs_bucketed(
     this generator (deterministic hyperplanes → the parity test result
     IS the driver result).
 
-    **Shuffle shape** (``attach`` — guide §8 "decide small, move once",
-    r13): the OR-amplification must co-locate every (table, bucket)
-    group, and each vector belongs to ``tables`` groups, so SOME
-    replication of the vectors is inherent. What is NOT inherent is
-    shipping the replicas through the exchange: with
-    ``attach="broadcast"`` (or ``"auto"``, which picks broadcast under
-    ``attach_limit_bytes`` by Catalyst's size estimate), only narrow
-    (id, table, bucket) rows are exploded and shuffled — vector bytes
-    cross the network ONCE per executor as a broadcast build — and the
-    vectors re-attach AFTER the exchange via a broadcast hash join that
-    preserves the (table, bucket) partitioning (no second exchange; CI
+    **Shuffle shape** (``attach``): the OR-amplification must
+    co-locate every (table, bucket) group, and each vector belongs to
+    ``tables`` groups, so SOME replication of the vectors is inherent.
+    What is NOT inherent is shipping the replicas through the
+    exchange: with ``attach="broadcast"`` only narrow (id, table,
+    bucket) rows are exploded and shuffled — vector bytes cross the
+    network ONCE per executor as a broadcast build — and the vectors
+    re-attach AFTER the exchange via a broadcast hash join that
+    preserves the (table, bucket) partitioning (no second exchange;
     plan gate in tests/test_similarity_lsh.py). The amplification
     exchange shrinks ~30× (vector payload → 20 bytes/row). Both shapes
     score identical groups, so the emitted pair set is bit-identical
     (the decision is performance-only).
 
     ``"carry"`` is the DEFAULT on measurement, not on principle
-    (r13 A/B, 32-core local): in local/VM deployments the exchange is
+    (32-core local A/B): in local/VM deployments the exchange is
     memory-backed, so the narrow shuffle saves ~nothing while the
     broadcast build + extra stage cost real time — sf0.1 carry 1.65 s
     vs broadcast 3.31 s, sf1 5.49 vs 7.26 s, and in-bucket gram
     scoring (inherently O(n²) per bucket) dominates both. Carry is
     also the only correct shape at the 100 TB target, where the corpus
-    side exceeds the 8 GB broadcast cap. Choose ``"broadcast"`` (or
-    ``"auto"``) on network-bound clusters with a mid-scale corpus,
-    where cutting shuffle bytes ``tables``-fold is the lever the §8
-    pattern exists for."""
+    side exceeds the 8 GB broadcast cap. Choose ``"broadcast"`` on
+    network-bound clusters with a mid-scale corpus, where cutting
+    shuffle bytes ``tables``-fold is the lever."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     from ..session import parallelize_small
 
+    if attach not in ("broadcast", "carry"):
+        raise ValueError(f"attach must be broadcast|carry: {attach!r}")
     if planes is None or tables is None:
         auto_planes, auto_tables = lsh_params_for_threshold(threshold)
         planes = planes if planes is not None else auto_planes
@@ -263,19 +273,8 @@ def near_dup_pairs_bucketed(
     # side keeps the RAW projection — BroadcastExchange collects to one
     # place anyway, so parallelize_small's repartition would be a
     # wasted exchange there.
-    raw = df.select(id_col, vec_col)
+    raw = df.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
     df = parallelize_small(raw)
-
-    if attach == "auto":
-        try:
-            est = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            est = attach_limit_bytes + 1  # stats unavailable: play safe
-        attach = "broadcast" if est <= attach_limit_bytes else "carry"
-    if attach not in ("broadcast", "carry"):
-        raise ValueError(f"attach must be auto|broadcast|carry: {attach!r}")
 
     w_t = np.array(hyperplane_weights(planes * tables, dim)).T  # dim × (p·t)
     pow2 = (1 << np.arange(planes)).astype(np.int64)
@@ -291,9 +290,8 @@ def near_dup_pairs_bucketed(
 
     if attach == "broadcast":
         # narrow explode: the exchange moves (id, table, bucket) only;
-        # the explicit repartition puts the shuffle BELOW the join, and
-        # the broadcast join's output keeps that hash partitioning so
-        # groupBy().applyInPandas needs no second exchange
+        # the broadcast join's output keeps the repartition's hash
+        # partitioning, so the scorer's sort needs no second exchange
         sk = (
             df.select(
                 F.col(id_col).alias("id"),
@@ -314,7 +312,7 @@ def near_dup_pairs_bucketed(
             F.col(id_col).alias("id"),
             F.col(vec_col),
             F.posexplode(_buckets(F.col(vec_col))).alias("table", "bucket"),
-        )
+        ).repartition("table", "bucket")
     id_type = df.schema[id_col].dataType.simpleString()
 
     def _score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -362,9 +360,36 @@ def near_dup_pairs_bucketed(
             }
         )
 
+    def _score_sorted(batches):
+        # rows arrive sorted on (table, bucket): each run of equal keys
+        # is one group. A run is kept as pieces until a later key (or
+        # the end) closes it, then concatenated once, so a group cut by
+        # Arrow batch edges is scored whole
+        pieces, key = [], None
+        for pdf in batches:
+            tb, bk = pdf["table"].values, pdf["bucket"].values
+            brk = (tb[1:] != tb[:-1]) | (bk[1:] != bk[:-1])
+            cuts = (np.flatnonzero(brk) + 1).tolist()
+            out = []
+            for s, e in zip([0, *cuts], [*cuts, len(pdf)]):
+                if s == e:  # empty batch
+                    continue
+                if pieces and (tb[s], bk[s]) != key:
+                    out.append(_score_bucket(pd.concat(pieces)))
+                    pieces = []
+                pieces.append(pdf.iloc[s:e])
+                key = (tb[s], bk[s])
+            out = [o for o in out if len(o)]
+            if out:
+                yield pd.concat(out, ignore_index=True)
+        if pieces:
+            last = _score_bucket(pd.concat(pieces))
+            if len(last):
+                yield last
+
     return (
-        sk.groupBy("table", "bucket")
-        .applyInPandas(_score_bucket, f"id1 {id_type}, id2 {id_type}, sim double")
+        sk.sortWithinPartitions("table", "bucket", "id")
+        .mapInPandas(_score_sorted, f"id1 {id_type}, id2 {id_type}, sim double")
         .dropDuplicates(["id1", "id2"])
     )
 

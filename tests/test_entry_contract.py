@@ -156,7 +156,9 @@ _R12_WINDOW = [
 # sentinels. Evicted: the r11 births (green 2-3 rounds), the eleven
 # r11 rotate-backs that re-passed r12, the r06 suite family that just
 # re-checked. Pinned so appending catalog entries can never
-# reorder-and-evict a row mid-round.
+# reorder-and-evict a row mid-round. text_lm_perplexity has since
+# taken a2_count's slot (its model frames became Arrow local
+# relations), leaving every rotation property below intact.
 _R13_WINDOW = [
     "a1_top5_7day_sum",
     "similarity_pairs_lsh_portable", "similarity_ivf_knn_portable",
@@ -176,7 +178,7 @@ _R13_WINDOW = [
     "tpch_q5_regional_revenue", "tpch_q18_large_orders",
     "tpch_q21_waiting_supplier", "tpch_q10_returned_items",
     "dedup_cluster_lsh", "stream_neardup_ingest",
-    "a2_count", "k_matview_dim_evolution_readback",
+    "text_lm_perplexity", "k_matview_dim_evolution_readback",
     "k6_update_readback", "window_keep_latest", "sessionize_30m",
     "dedup_exact", "multimodal_meta", "dedup_span_exact",
     "dedup_minhash_lsh_portable",

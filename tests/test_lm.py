@@ -169,3 +169,52 @@ def test_inplan_thresholds_match_helper(spark):
         for r in L.lm_bucket(scored, t1, t2).collect()
     }
     assert {k: r["bucket"] for k, r in out.items()} == expect
+
+
+def test_model_frames_are_local_table_scans(spark):
+    """The model's count frames are one Arrow batch each: the scoring
+    plan reads them as LocalTableScan, never as a pickled Python RDD
+    (Scan ExistingRDD runs a Python task per partition at each
+    broadcast)."""
+    d = _docs(spark)
+    cb, cu, v = L.bigram_lm_train(d, sample_limit=64)
+    assert cb.count() > 0 and cu.count() > 0
+    plan = (
+        L.lm_score(d, cb, cu, v)._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+
+
+def test_empty_training_sample_keeps_model_schema(spark):
+    df = spark.createDataFrame([(1, "a b c")], ["doc_id", "text"])
+    cb, cu, v = L.bigram_lm_train(df.filter(F.lit(False)), sample_limit=10)
+    assert cb.schema.simpleString() == "struct<a:string,b:string,cb:bigint>"
+    assert cu.schema.simpleString() == "struct<a:string,cu:bigint>"
+    assert cb.count() == 0 and cu.count() == 0 and v == 0.0
+    assert "LocalTableScan" in cb._jdf.queryExecution().executedPlan().toString()
+
+
+def test_pipeline_null_text_in_sample_is_empty_doc(spark):
+    """A NULL text in the training sample counts as an empty document
+    (no bigrams, no vocabulary), as lm_score's explode_outer does."""
+    df = spark.createDataFrame(
+        [(1, "a b a"), (2, None), (3, "b a b")], "doc_id long, text string"
+    )
+    out = {
+        r["doc_id"]: r
+        for r in L.lm_perplexity_pipeline(df, sample_limit=2).collect()
+    }
+    assert set(out) == {1, 2, 3}
+    assert out[2]["n_bigrams"] == 0 and out[2]["bucket"] == "unscored"
+    # the model equals the one trained on the non-NULL sample docs
+    sample = [
+        r["doc_id"]
+        for r in L.lm_sample_ids(df, sample_limit=2).collect()
+    ]
+    cb, cu, v = L.bigram_lm_train(
+        df.filter(F.col("doc_id").isin(sample) & F.col("text").isNotNull()),
+        sample_limit=10,
+    )
+    ref = {r["doc_id"]: r["xent"] for r in L.lm_score(df, cb, cu, v).collect()}
+    assert {k: r["xent"] for k, r in out.items()} == ref

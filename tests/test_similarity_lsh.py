@@ -9,6 +9,8 @@ EXACTLY what the driver's correctness run will see.
 
 from __future__ import annotations
 
+import pytest
+
 from aws_etl_project2_fiap_spark.operators.similarity import (
     lsh_params_for_threshold,
     near_dup_pairs_bucketed,
@@ -108,12 +110,18 @@ def test_int8_quantization_preserves_topk(spark):
     assert len(set(exact) & set(quant)) >= 9
 
 
+def _formatted_plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
 def test_attach_modes_bit_identical_and_narrow_shuffle(spark):
-    """r13 (guide §8): the broadcast-attach shape must emit the exact
-    same (id1, id2, sim) rows as the vector-carrying shape, and its
-    amplification Exchange must move only (id, table, bucket) — the
-    vectors re-attach via BroadcastHashJoin AFTER the exchange with no
-    second Exchange before FlatMapGroupsInPandas."""
+    """The broadcast-attach shape must emit the exact same (id1, id2,
+    sim) rows as the vector-carrying shape, and its amplification
+    Exchange must move only (id, table, bucket) — the vectors
+    re-attach via BroadcastHashJoin AFTER the exchange, with no second
+    Exchange between the join and the scorer's Sort."""
     import re
 
     e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
@@ -129,23 +137,21 @@ def test_attach_modes_bit_identical_and_narrow_shuffle(spark):
         )
     assert rows["broadcast"] == rows["carry"] and rows["carry"]
 
-    df = near_dup_pairs_bucketed(e, threshold=0.4, attach="broadcast")
-    p = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
+    p = _formatted_plan(
+        near_dup_pairs_bucketed(e, threshold=0.4, attach="broadcast")
     )
     assert "BroadcastHashJoin" in p
-    # the operator section after FlatMapGroupsInPandas' child Sort must
-    # reach the BHJ without crossing an Exchange (partitioning from the
-    # narrow repartition is preserved through the join)
+    # the operator section from the scorer (MapInPandas) down through
+    # its Sort must reach the BHJ without crossing an Exchange (the
+    # narrow repartition's partitioning is preserved through the join)
     tree = p.split("\n\n")[0]
-    seg = tree[
-        tree.index("FlatMapGroupsInPandas"): tree.index("BroadcastHashJoin")
-    ]
+    seg = tree[tree.index("MapInPandas"): tree.index("BroadcastHashJoin")]
+    assert "Sort" in seg
     assert "Exchange" not in seg
     # the AMPLIFICATION exchange — hashpartitioning(table, bucket) —
     # must not carry the vector column (parallelize_small's round-robin
     # repartition before the sketch legitimately moves each vector ONCE;
-    # the 48x-replicated rows are the ones that must stay narrow)
+    # the tables-fold replicated rows are the ones that must stay narrow)
     amp = [
         m
         for m in re.finditer(
@@ -159,31 +165,57 @@ def test_attach_modes_bit_identical_and_narrow_shuffle(spark):
     for m in amp:
         assert "embedding" not in m.group(1), m.group(0)
 
-    # auto mode resolves to broadcast at this (tiny) scale and stays
-    # bit-identical; an explicit tiny limit forces the carry fallback
-    auto_rows = sorted(
-        map(
-            tuple,
-            near_dup_pairs_bucketed(e, threshold=0.4, attach="auto").collect(),
-        )
-    )
-    assert auto_rows == rows["carry"]
-    forced = near_dup_pairs_bucketed(
-        e, threshold=0.4, attach="auto", attach_limit_bytes=1
-    )
-    pf = forced._sc._jvm.PythonSQLUtils.explainString(
-        forced._jdf.queryExecution(), "formatted"
-    )
-    assert "BroadcastHashJoin" not in pf
     # the DEFAULT is carry (measured faster at local scales and the
     # only correct shape at the 100 TB corpus — see the docstring):
     # the bench/portable queries call with no attach argument, so this
     # pins their plan shape
-    default = near_dup_pairs_bucketed(e, threshold=0.4)
-    pd_ = default._sc._jvm.PythonSQLUtils.explainString(
-        default._jdf.queryExecution(), "formatted"
-    )
+    pd_ = _formatted_plan(near_dup_pairs_bucketed(e, threshold=0.4))
     assert "BroadcastHashJoin" not in pd_
+    assert "MapInPandas" in pd_ and "FlatMapGroupsInPandas" not in pd_
+    with pytest.raises(ValueError):
+        near_dup_pairs_bucketed(e, threshold=0.4, attach="auto")
+
+
+def test_bucketed_pairs_match_exact_when_groups_span_batches(spark):
+    """With 7-row Arrow batches most (table, bucket) groups arrive in
+    pieces across batches; the scorer must still assemble each group
+    whole and emit exactly the exact variant's pairs and sims."""
+    e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    exact = {
+        (r.id1, r.id2): r.sim
+        for r in near_dup_pairs_exact(e, threshold=0.4).collect()
+    }
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = {
+            (r.id1, r.id2): r.sim
+            for r in near_dup_pairs_bucketed(e, threshold=0.4).collect()
+        }
+    finally:
+        spark.conf.set(key, old)
+    assert exact and got == exact
+
+
+def test_bucketed_pairs_skip_null_vectors(spark):
+    """A NULL embedding forms no pair (SQL: list_cosine_similarity of
+    NULL is NULL) and must not break the sketch matmul."""
+    from pyspark.sql import functions as F
+
+    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    want = _pairs(near_dup_pairs_bucketed(e, threshold=0.4))
+    nulls = e.limit(3).select(
+        (F.col("vec_id") + 10_000_000).alias("vec_id"),
+        F.lit(None).cast(e.schema["embedding"].dataType).alias("embedding"),
+    )
+    got = _pairs(
+        near_dup_pairs_bucketed(
+            e.select("vec_id", "embedding").unionByName(nulls),
+            threshold=0.4,
+        )
+    )
+    assert want and got == want
 
 
 def test_fixed_param_bucketed_pairs_subset_of_exact(spark):
