@@ -17,6 +17,8 @@ from aws_etl_project2_fiap_spark.operators.similarity import (
     near_dup_pairs_exact,
 )
 
+from conftest import SF_ORACLE, SF_SMOKE
+
 
 def _pairs(df) -> set[tuple[int, int]]:
     return {(r.id1, r.id2) for r in df.collect()}
@@ -180,7 +182,7 @@ def test_bucketed_pairs_match_exact_when_groups_span_batches(spark):
     """With 7-row Arrow batches most (table, bucket) groups arrive in
     pieces across batches; the scorer must still assemble each group
     whole and emit exactly the exact variant's pairs and sims."""
-    e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    e = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
     exact = {
         (r.id1, r.id2): r.sim
         for r in near_dup_pairs_exact(e, threshold=0.4).collect()
@@ -203,7 +205,7 @@ def test_bucketed_pairs_skip_null_vectors(spark):
     NULL is NULL) and must not break the sketch matmul."""
     from pyspark.sql import functions as F
 
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    e = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     want = _pairs(near_dup_pairs_bucketed(e, threshold=0.4))
     nulls = e.limit(3).select(
         (F.col("vec_id") + 10_000_000).alias("vec_id"),
